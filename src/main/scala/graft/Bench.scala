@@ -16,33 +16,13 @@ import org.apache.spark.sql.SparkSession
   * so cross-round total comparisons should add ~nothing for r ≤ 5 (no
   * memo) and the r6 NOTES' ~4-5 s estimate for r6.
   *
-  * Adjudicability (since r8): this box has co-tenants whose load bursts
-  * have historically produced ±30% same-code drift, which a bare
-  * min-per-query JSON cannot distinguish from a plan regression. So
-  * besides the headline minima the JSON carries, per query, every RAW rep
-  * in execution order as `[sec, load_before, load_after, gc_sec]` under
-  * `"reps"` — 1-minute system load average sampled immediately before and
-  * after the rep, and JVM GC wall seconds accumulated during it — plus
-  * suite-level `load_start`/`load_end`/`gc_total_sec`. An unchanged query
-  * whose min drifts >1.5× across rounds is adjudicated from its reps: a
-  * high recorded load or GC share explains the drift as ambient; flat
-  * load with a uniformly slower rep pair is a real regression.
-  *
-  * SELF-adjudication (since r15): the artifact also carries the verdict,
-  * not just the evidence. Every query is compared against its committed
-  * quiet-box floor (`tools/query_ref.json`) and each ≥1.5× mover is
-  * classified in-band under `"load_adjudicated"` (ambient /
-  * ambient-uniform / ambient-moderate / gc / improved / check — see the
-  * inline comment at the computation) with `"ref_drift_median"` and
-  * `"unexplained_movers"` summarizing the suite; a driver bench under
-  * co-tenant load reads as noise from the committed JSON alone.
+  * Per query, the JSON also carries every raw rep in execution order
+  * under `"reps"` (wall seconds, -1 for a failed rep). Where a query's
+  * time went is measured outside the engine: `perfbench/run.py --trace 1`
+  * records each layer (catalyst, codegen, scheduler, executor, shuffle,
+  * memo) from listeners the harness registers itself.
   */
 object Bench {
-
-  /** One measured execution: wall seconds (-1 on failure), 1-min system
-    * load average before/after, and JVM GC wall seconds during.
-    */
-  final case class Rep(sec: Double, load0: Double, load1: Double, gcSec: Double)
 
   // Latest run's summary line + the stdout it should be re-emitted on.
   // A STATIC holder with a register-once flag (r12 advisor): each
@@ -55,38 +35,6 @@ object Bench {
     new java.util.concurrent.atomic.AtomicReference[(java.io.PrintStream, String)]()
   private val hookRegistered = new java.util.concurrent.atomic.AtomicBoolean(false)
 
-  private def loadAvg: Double =
-    java.lang.management.ManagementFactory.getOperatingSystemMXBean.getSystemLoadAverage
-
-  private def gcMillis: Long = {
-    import scala.jdk.CollectionConverters._
-    java.lang.management.ManagementFactory.getGarbageCollectorMXBeans.asScala
-      .map(_.getCollectionTime).sum
-  }
-
-
-  /** Committed reference map (name -> quiet-box seconds): env-var
-    * override, else a bounded upward walk from cwd for tools/<file> —
-    * one definition for memo_ref and query_ref so the r12 cwd-relative
-    * disarm fix cannot diverge between the two tripwires. Missing or
-    * unparsable => empty map (tripwire inert).
-    */
-  private def refMap(envVar: String, fileName: String): Map[String, Double] = {
-    val path: Option[java.nio.file.Path] =
-      sys.env.get(envVar).map(java.nio.file.Paths.get(_))
-        .orElse {
-          Iterator.iterate(java.nio.file.Paths.get("").toAbsolutePath)(_.getParent)
-            .takeWhile(_ != null).take(8)
-            .map(_.resolve(s"tools/$fileName"))
-            .find(java.nio.file.Files.isReadable(_))
-        }
-    try {
-      val txt = new String(java.nio.file.Files.readAllBytes(path.get), "UTF-8")
-      """"([^"]+)"\s*:\s*([0-9.]+)""".r.findAllMatchIn(txt)
-        .map(m => m.group(1) -> m.group(2).toDouble).toMap
-    } catch { case _: Exception => Map.empty }
-  }
-
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
@@ -94,11 +42,9 @@ object Bench {
     val spark = graft.core.Sessions.builder(s"local[$cpus]", cpus.toInt).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
-    val reps = scala.collection.mutable.Map[String, scala.collection.mutable.ArrayBuffer[Rep]]()
+    val reps = scala.collection.mutable.Map[String, scala.collection.mutable.ArrayBuffer[Double]]()
 
     def runOnce(name: String): Double = {
-      val l0 = loadAvg
-      val g0 = gcMillis
       val t0 = System.nanoTime()
       val sec =
         try {
@@ -110,7 +56,7 @@ object Bench {
           -1.0
         }
       reps.getOrElseUpdate(name, scala.collection.mutable.ArrayBuffer.empty)
-        .append(Rep(sec, l0, loadAvg, (gcMillis - g0) / 1e3))
+        .append(sec)
       // Sketch queries localCheckpoint intermediates; without an explicit
       // unpersist those blocks live until the DataFrame is GC'd, so a
       // 50-query x 2-run suite accumulates hundreds of dead cached RDDs
@@ -122,9 +68,6 @@ object Bench {
       org.apache.spark.sql.graft.CheckpointUtils.sweepUnpinned(spark.sparkContext)
       sec
     }
-
-    val loadStart = loadAvg
-    val gcStart = gcMillis
 
     // Warmup: JIT + codegen + parquet footer caches on a cheap query
     // (not recorded in reps).
@@ -175,19 +118,15 @@ object Bench {
       .mkString("{", ",", "}")
     val total = results.map(_._2).filter(_ >= 0).sum + builds.map(_._2).sum
     val repsJson = names.map { n =>
-      val rs = reps.getOrElse(n, Nil).map(r =>
-        f"[${r.sec}%.3f,${r.load0}%.2f,${r.load1}%.2f,${r.gcSec}%.3f]")
-      "\"" + n + "\":" + rs.mkString("[", ",", "]")
+      "\"" + n + "\":" + reps.getOrElse(n, Nil).map(r => f"$r%.3f").mkString("[", ",", "]")
     }.mkString("{", ",", "}")
-    val suite = f""""load_start":$loadStart%.2f,"load_end":$loadAvg%.2f,""" +
-      f""""gc_total_sec":${(gcMillis - gcStart) / 1e3}%.3f,"cpus":$cpus"""
     // Key ORDER in the emitted line is deliberate: the round driver
     // retains only a bounded TAIL of this line (BENCH_r07 kept the last
     // 2000 chars — r7's verdict could only grade "the visible overlap in
     // both bench tails"), so the headline "queries"/"memo_build" minima
     // sit at the END, after the bulky per-rep detail. The FULL line is
-    // also mirrored to a repo-local file so every field (reps, loads,
-    // GC) stays adjudicable regardless of the tail window.
+    // also mirrored to a repo-local file so every field survives
+    // regardless of the tail window.
     // Loud-failure + toolchain canary (both deliberately near the END of
     // the line so they survive the driver's tail window): a query that
     // threw in every rep is named in "failed" — a sentinel-only -1 hiding
@@ -196,122 +135,18 @@ object Bench {
     // silent toolchain swap is visible in the artifact diff.
     val failed = results.collect { case (n, v) if v < 0 => "\"" + n + "\"" }
       .mkString("[", ",", "]")
-    // Memo builds are single-shot (no second pass to adjudicate against),
-    // so each carries its own load stamps: [sec, load_before, load_after].
-    // A build whose recorded loads dwarf load_start is a co-tenant burst,
-    // not a regression — the same per-rep adjudication queries get.
-    val mbTelemetry = graft.operators.OpUtils.SessionMemo.buildTelemetry
-    val mbReps = mbTelemetry.toSeq.sortBy(_._1)
-      .map { case (k, es) =>
-        "\"" + k + "\":" + es.map { case (s, l0, l1) =>
-          f"[$s%.3f,$l0%.2f,$l1%.2f]" }.mkString("[", ",", "]")
-      }.mkString("{", ",", "}")
-    // Memo-build regression tripwire: builds run ONCE (no second pass to
-    // adjudicate against), so compare each against a committed quiet-hour
-    // reference figure (tools/memo_ref.json, measured on an idle box) and
-    // alert IN-BAND when a build exceeds 2.5x its reference — the alert
-    // carries the build's own load stamps, so the artifact itself says
-    // "ambient burst" (loads >> load_start) vs "regression" (flat loads).
-    // The r11 driver run's 31.3 s containment_pairs build (vs 5.4 s r10)
-    // could not be adjudicated from the artifact alone; this closes that.
-    // Reference file missing or unparsable => tripwire inert (empty map).
-    // Path resolution (r12 advisor): a cwd-relative default silently
-    // disarms the tripwire when Bench runs from a subdirectory, so walk
-    // up from cwd looking for tools/memo_ref.json (bounded repo-root
-    // discovery) when the plain relative path doesn't resolve.
-    val memoRef: Map[String, Double] =
-      refMap("SPARK_GRAFT_MEMO_REF", "memo_ref.json")
-    // Ledger keys gain an `@<dirBasename>` suffix when one key touched
-    // several corpora in this process (the multi-SF case); the committed
-    // reference is keyed by the bare name, so strip the suffix for the
-    // lookup (r12 advisor) — otherwise the tripwire is silently inert
-    // for exactly the builds being compared.
-    val alerts = builds.flatMap { case (k, sec) =>
-      val bare = k.lastIndexOf('@') match {
-        case -1 => k
-        case i  => k.substring(0, i)
-      }
-      memoRef.get(bare).filter(ref => sec > ref * 2.5).map { ref =>
-        val loads = mbTelemetry.getOrElse(k, Nil)
-          .map { case (_, l0, l1) => f"[$l0%.2f,$l1%.2f]" }
-          .mkString("[", ",", "]")
-        "\"" + k + "\":" + f"""{"sec":$sec%.3f,"ref":$ref%.3f,"loads":$loads}"""
-      }
-    }
-    val mbAlerts = alerts.mkString("{", ",", "}")
-    // PER-QUERY self-adjudication (r14 verdict item 3: the last three
-    // rounds each spent a verdict item adjudicating co-tenant noise
-    // from a later quiet run — the committed artifact should carry its
-    // own noise-vs-regression call). Compare each query's min against
-    // the committed quiet-box floor (tools/query_ref.json, same
-    // discovery walk as memo_ref) and classify every >=1.5x mover from
-    // IN-BAND evidence:
-    //  - "ambient": every rep of the query ran under recorded 1-min
-    //    loads >= max(2, 2x the suite's load_start) — the co-tenant
-    //    burst signature;
-    //  - "ambient-uniform": the query's ratio tracks the suite-wide
-    //    MEDIAN drift vs the reference while that drift is itself
-    //    elevated (>=1.15x) — uniform slowdown is load, not a plan
-    //    change (a regression is query-shaped, not suite-shaped);
-    //  - "ambient-moderate" (r15 verdict item 3): moderate uniform
-    //    load, scattered SMALL movers — the r15 artifact's failure
-    //    mode, where load_start was already 4.8 so the "ambient" rule's
-    //    2x-load_start threshold (9.6) self-defeated and 13 sub-1.5 s
-    //    movers landed formally unexplained. When the suite median
-    //    drift sits under 1.15 (no uniform story) but every rep of the
-    //    query ran under 1-min loads >= 4 and the query's own wall is
-    //    under 1.5 s, scheduling jitter at that load fully covers the
-    //    delta — sub-second queries are the documented noisiest class;
-    //  - "gc": >30% of the best rep's wall was JVM GC;
-    //  - "check": none of the above explains it — a real candidate.
-    // Improvements >=1.5x are listed as "improved" so stale floors get
-    // re-trued from the next quiet run. Reference missing => inert.
-    val queryRef: Map[String, Double] =
-      refMap("SPARK_GRAFT_QUERY_REF", "query_ref.json")
-    val resMap = results.toMap
-    val ratios = results.collect {
-      case (n, v) if v > 0 && queryRef.getOrElse(n, 0.0) > 0 =>
-        n -> v / queryRef(n)
-    }.toMap
-    val driftMedian =
-      if (ratios.isEmpty) 1.0
-      else { val s = ratios.values.toSeq.sorted; s(s.length / 2) }
-    val adjudicated = ratios.toSeq.sortBy(-_._2).collect {
-      case (n, r) if r >= 1.5 || r <= 1.0 / 1.5 =>
-        val rs = reps.getOrElse(n, Nil).filter(_.sec >= 0)
-        val allHot = rs.nonEmpty && rs.forall(x =>
-          math.max(x.load0, x.load1) >= math.max(2.0, 2.0 * loadStart))
-        val best = if (rs.isEmpty) None else Some(rs.minBy(_.sec))
-        val gcShare = best.map(b => if (b.sec > 0) b.gcSec / b.sec else 0.0)
-          .getOrElse(0.0)
-        val cls =
-          if (r <= 1.0 / 1.5) "improved"
-          else if (allHot) "ambient"
-          else if (driftMedian >= 1.15 && r <= driftMedian * 1.3) "ambient-uniform"
-          else if (driftMedian < 1.15 && resMap(n) < 1.5 &&
-            rs.nonEmpty && rs.forall(x =>
-              math.max(x.load0, x.load1) >= 4.0)) "ambient-moderate"
-          else if (gcShare > 0.3) "gc"
-          else "check"
-        val loads = rs.map(x => f"[${x.load0}%.2f,${x.load1}%.2f]")
-          .mkString("[", ",", "]")
-        "\"" + n + "\":" + f"""{"sec":${resMap(n)}%.3f,""" +
-          f""""ref":${queryRef(n)}%.3f,"ratio":$r%.2f,"class":"$cls","loads":$loads}"""
-    }
-    val loadAdjudicated = adjudicated.mkString("{", ",", "}")
-    val unexplained = adjudicated.count(_.contains("\"class\":\"check\""))
     // A query that failed one whole pass but recovered in the other still
     // reports a valid min — name it here so a flaky failure (intermittent
     // OOM) survives the driver's tail window instead of hiding as a -1
     // buried in the per-rep detail.
     val partialFailures = results.collect {
-      case (n, v) if v >= 0 && reps.getOrElse(n, Nil).exists(_.sec < 0) => "\"" + n + "\""
+      case (n, v) if v >= 0 && reps.getOrElse(n, Nil).exists(_ < 0) => "\"" + n + "\""
     }.mkString("[", ",", "]")
     val nValid = results.count(_._2 >= 0)
     // "total"/"n_valid" repeat the headline at the very END of the line:
     // the driver retains a bounded tail, and BENCH_r09's tail lost
     // q1-q36 of the queries map — the headline must be the last thing cut.
-    val line = s"""{"metric":"total","value":${f"$total%.3f"},"unit":"sec","reps":$repsJson,$suite,"queries":$qs,"memo_build":$mb,"memo_build_reps":$mbReps,"memo_build_alerts":$mbAlerts,"ref_drift_median":${f"$driftMedian%.3f"},"load_adjudicated":$loadAdjudicated,"unexplained_movers":$unexplained,"sf":"$sfDir","spark_version":"${spark.version}","failed":$failed,"partial_failures":$partialFailures,"total":${f"$total%.3f"},"n_valid":$nValid}"""
+    val line = s"""{"metric":"total","value":${f"$total%.3f"},"unit":"sec","reps":$repsJson,"cpus":$cpus,"queries":$qs,"memo_build":$mb,"sf":"$sfDir","spark_version":"${spark.version}","failed":$failed,"partial_failures":$partialFailures,"total":${f"$total%.3f"},"n_valid":$nValid}"""
     println(line)
     val mirror = sys.env.getOrElse("SPARK_GRAFT_BENCH_COPY", "/root/repo/BENCH_LOCAL.json")
     val mirrored =
@@ -326,7 +161,7 @@ object Bench {
     // lives in the full line above AND in the mirror file; this line
     // carries the headline totals plus the mirror path so the tail
     // always ends in valid JSON no matter how narrow the window.
-    val summary = s"""{"metric":"total","value":${f"$total%.3f"},"unit":"sec","sf":"$sfDir","spark_version":"${spark.version}","n_valid":$nValid,"failed":$failed,"partial_failures":$partialFailures,"memo_build_total":${f"${builds.map(_._2).sum}%.3f"},"memo_build_alerts":$mbAlerts,"ref_drift_median":${f"$driftMedian%.3f"},"load_adjudicated":$loadAdjudicated,"unexplained_movers":$unexplained,"full_json":${if (mirrored) "\"" + mirror + "\"" else "null"},"total":${f"$total%.3f"}}"""
+    val summary = s"""{"metric":"total","value":${f"$total%.3f"},"unit":"sec","sf":"$sfDir","spark_version":"${spark.version}","n_valid":$nValid,"failed":$failed,"partial_failures":$partialFailures,"memo_build_total":${f"${builds.map(_._2).sum}%.3f"},"full_json":${if (mirrored) "\"" + mirror + "\"" else "null"},"total":${f"$total%.3f"}}"""
     println(summary)
     // File artifact for the summary (r12 verdict item 7): nothing should
     // have to parse stdout at all — the compact summary object lands next

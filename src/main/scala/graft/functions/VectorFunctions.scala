@@ -130,20 +130,22 @@ case class DotProduct(left: Expression, right: Expression) extends BinaryExpress
 }
 
 /** Integer squared L2 distance over two BIGINT arrays (the frozen-vector
-  * kernel of the trained-PQ family): sum (x−y)² in Long arithmetic over
-  * the common prefix — bit-identical to the previous
+  * kernel of the trained-PQ family): sum (x−y)² in Long arithmetic —
+  * bit-identical to the previous
   * `aggregate(zip_with(a, b, (x,y) => (x−y)*(x−y)), 0L, _+_)` form on the
   * equal-length arrays this engine feeds it (integer adds are exact and
   * order-trivial), but codegen'd: the higher-order-function form is
   * CodegenFallback — per-element interpreted lambdas plus an intermediate
   * array allocation per row — and it sat on the hot path of every
   * assignment/probe/Lloyd-scoring stage (r16: q250's probe stage spent
-  * 1.7 s CPU on 128k rows in the interpreted form).
+  * 1.7 s CPU on 128k rows in the interpreted form). Arrays of unequal
+  * length have no distance: the result is NULL, not a sum over the
+  * common prefix that would pass for a real one.
   */
 case class IntSqDist(left: Expression, right: Expression) extends BinaryExpression {
 
   override def dataType: DataType = LongType
-  override def nullable: Boolean = left.nullable || right.nullable
+  override def nullable: Boolean = true
 
   override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult = {
     def ok(e: Expression) = e.dataType match {
@@ -160,7 +162,8 @@ case class IntSqDist(left: Expression, right: Expression) extends BinaryExpressi
   override def nullSafeEval(a: Any, b: Any): Any = {
     val xs = a.asInstanceOf[ArrayData]
     val ys = b.asInstanceOf[ArrayData]
-    val n = math.min(xs.numElements(), ys.numElements())
+    val n = xs.numElements()
+    if (ys.numElements() != n) return null
     var s = 0L; var i = 0
     while (i < n) {
       val d = xs.getLong(i) - ys.getLong(i)
@@ -177,9 +180,10 @@ case class IntSqDist(left: Expression, right: Expression) extends BinaryExpressi
       val s = ctx.freshName("s")
       val d = ctx.freshName("d")
       s"""
-         |final int $n = java.lang.Math.min($a.numElements(), $b.numElements());
+         |final int $n = $a.numElements();
          |long $s = 0L;
-         |for (int $i = 0; $i < $n; $i++) {
+         |if ($b.numElements() != $n) { ${ev.isNull} = true; }
+         |else for (int $i = 0; $i < $n; $i++) {
          |  final long $d = $a.getLong($i) - $b.getLong($i);
          |  $s += $d * $d;
          |}

@@ -751,22 +751,6 @@ object Dedup {
       .localCheckpoint()
   }
 
-  /** Diagnostic stage view of [[crossNearDupIds]]: the candidate-pair
-    * relation the cross probe would verify — lets the off-fixture
-    * streaming stress tool (graft.tools.ScaleEvidence `stream`) count
-    * candidate volume per micro-batch without touching the declared path.
-    */
-  private[graft] def crossCandidates(corpus: DataFrame, batch: DataFrame,
-      minJaccard: Double): DataFrame = {
-    val spark = corpus.sparkSession
-    import spark.implicits._
-    val gx = crossGx(corpus, batch)
-    val hx = gx.join(gramDictFast(spark, gx), Seq("g"))
-      .select($"doc_id", $"h").localCheckpoint()
-    val docs = invertedDocsFromHx(spark, hx, minJaccard)
-    invertedCandidatesFromDocs(docs, minJaccard)
-  }
-
   private def ngramJaccardInvertedCore(spark: SparkSession, dir: String,
       minJaccard: Double,
       dict: (SparkSession, DataFrame) => DataFrame): DataFrame =
@@ -786,10 +770,8 @@ object Dedup {
 
   /** The prefix-filter pipeline over a prebuilt hashed (doc_id, h)
     * relation — the branch point: document frequencies, prefixes and
-    * verification sets all derive from it. Split into three
-    * `private[graft]` stages so the off-fixture stress tool
-    * (graft.tools.SSJoinStress) can count candidate pairs separately
-    * from verified output.
+    * verification sets all derive from it, in three stages: per-doc
+    * hash arrays, prefix-join candidates, exact verification.
     */
   private def ngramJaccardInvertedFromHx(spark: SparkSession, hx: DataFrame,
       minJaccard: Double): DataFrame = {
@@ -799,7 +781,7 @@ object Dedup {
   }
 
   /** Stage 1: per-doc sorted hash arrays + rarity-ordered prefix length. */
-  private[graft] def invertedDocsFromHx(spark: SparkSession, hx: DataFrame,
+  private def invertedDocsFromHx(spark: SparkSession, hx: DataFrame,
       minJaccard: Double): DataFrame = {
     import spark.implicits._
     val dfreq = hx.groupBy($"h").agg(count(lit(1)).as("df"))
@@ -821,7 +803,7 @@ object Dedup {
   }
 
   /** Stage 2: candidate pairs from the rare-shingle prefix equi-join. */
-  private[graft] def invertedCandidatesFromDocs(docs: DataFrame,
+  private def invertedCandidatesFromDocs(docs: DataFrame,
       minJaccard: Double): DataFrame = {
     import docs.sparkSession.implicits._
     val prefixes = docs
@@ -841,7 +823,7 @@ object Dedup {
   }
 
   /** Stage 3: exact merge-intersection verification of the candidates. */
-  private[graft] def invertedVerifyFromDocs(docs: DataFrame, cand: DataFrame,
+  private def invertedVerifyFromDocs(docs: DataFrame, cand: DataFrame,
       minJaccard: Double): DataFrame = {
     import docs.sparkSession.implicits._
     val da = docs.select($"doc_id".as("a_id"), $"harr".as("ha"), $"n".as("na"))
@@ -1253,7 +1235,7 @@ object Dedup {
     import spark.implicits._
     // memoized pair relation: q179 is both a declared query and q180's
     // input, and the driver bench runs each twice — the same pair-table
-    // discipline as inv_pairs/q31_pairs (build adjudicated as a
+    // discipline as inv_pairs/q31_pairs (build reported as a
     // memo_build line item)
     memoized(spark, dir, "containment_pairs_0.8") {
       val t = 0.8
@@ -1547,16 +1529,9 @@ object Dedup {
     * replaces the per-round join; the fixpoint driver loop is the same.)
     * Singleton docs (no near-dup) are not emitted, matching the oracle.
     */
-  /** Rounds the most recent component run took — diagnostic for the
-    * stress tool (graft.tools.ComponentStress); not part of the query
-    * contract.
-    */
-  private[graft] val lastRounds = new java.util.concurrent.atomic.AtomicInteger(0)
-
   def dedupClusters(pairs: DataFrame): DataFrame = {
     val spark = pairs.sparkSession
     import spark.implicits._
-    lastRounds.set(0)
     val edges = pairs.select($"a_id".as("s"), $"b_id".as("d"))
       .union(pairs.select($"b_id".as("s"), $"a_id".as("d")))
       .localCheckpoint()
@@ -1585,7 +1560,6 @@ object Dedup {
       org.apache.spark.sql.graft.CheckpointUtils.free(labels)
       changed = next.filter($"lbl" < $"prev").count()
       labels = next.select($"v", $"lbl")
-      lastRounds.incrementAndGet()
     }
     val sizes = labels.groupBy($"lbl").agg(count(lit(1)).as("cluster_size"))
     labels.join(sizes, Seq("lbl"))
@@ -1624,7 +1598,6 @@ object Dedup {
   def dedupClustersStar(pairs: DataFrame): DataFrame = {
     val spark = pairs.sparkSession
     import spark.implicits._
-    lastRounds.set(0)
     val input = pairs.select($"a_id".as("s"), $"b_id".as("d")).localCheckpoint()
     // canonical orientation: (larger, smaller), self-loops dropped from
     // the ITERATION (they carry no connectivity) but their vertices are
@@ -1670,7 +1643,6 @@ object Dedup {
       edges = nextEdges
       prev = cur
       cur = fingerprint(edges)
-      lastRounds.incrementAndGet()
     }
     // converged: stars (node → component min); roots label themselves.
     // Vertices that appeared ONLY in self-pairs never entered the

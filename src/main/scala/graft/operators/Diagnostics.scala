@@ -272,9 +272,9 @@ object Diagnostics {
   }
 
   /** The distributed gap census behind q169, reusable over any BIGINT
-    * key relation (column `k`, duplicates allowed). ScaleEvidence's
-    * `gaps` mode measures this two-level form against the naive
-    * global-window lag as the key count grows.
+    * key relation (column `k`, duplicates allowed). NOTES_r10 §20
+    * measures this two-level form against the naive global-window lag
+    * as the key count grows.
     */
   def gapCensus(keys: DataFrame): DataFrame = {
     import keys.sparkSession.implicits._

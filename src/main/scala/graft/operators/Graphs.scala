@@ -113,7 +113,7 @@ object Graphs {
     * q125 and q202 — the second derived graph relation worth paying for
     * once per (session, dir): the adjacency build + intersection scan
     * is the expensive half of both queries, and as a memo table its
-    * first-touch cost is an adjudicated `memo_build` line item instead
+    * first-touch cost is a `memo_build` line item instead
     * of being re-paid per query.
     */
   private[graft] def triangleCountsMemo(spark: SparkSession, dir: String): DataFrame =
@@ -141,7 +141,7 @@ object Graphs {
     * but each oriented triangle (s, t, w) is exploded into its three
     * undirected edges before the count, so the result is keyed by edge
     * rather than by vertex. Memoized: q215 pays the adjacency build once
-    * per (session, dir) as an adjudicated `memo_build` line item.
+    * per (session, dir) as a `memo_build` line item.
     */
   private[graft] def edgeTriangleCountsMemo(spark: SparkSession, dir: String): DataFrame =
     memo(spark, dir, "edge_triangles") {
@@ -337,7 +337,7 @@ object Graphs {
     * artifact discipline as the dedup pair tables: q125/q134/q138 all
     * start from a co-purchase edge list, so the expensive distinct
     * self-join over lineitem is built once per (session, dir) and its
-    * first-touch cost shows up as an adjudicated `memo_build` line item
+    * first-touch cost shows up as a `memo_build` line item
     * in Bench instead of being re-paid inside every graph query.
     */
   private val memo = new OpUtils.SessionMemo("graphs")

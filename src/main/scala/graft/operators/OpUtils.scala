@@ -238,12 +238,10 @@ object OpUtils {
             // the parent's entry too — subtract it there (same exclusive
             // accounting as nested builds) so the ledger stays additive
             SessionMemo.addToParent(sec)
-            SessionMemo.record(s"$name.$key", dir, loaded = true,
-              sec, Double.NaN, Double.NaN)
+            SessionMemo.record(s"$name.$key", dir, loaded = true, sec)
             df
           case art =>
             val t0 = System.nanoTime()
-            val l0 = SessionMemo.loadAvg
             SessionMemo.pushFrame()
             val df =
               try build
@@ -261,7 +259,7 @@ object OpUtils {
             val child = SessionMemo.popFrame()
             SessionMemo.addToParent(total)
             SessionMemo.record(s"$name.$key", dir, loaded = false,
-              total - child, l0, SessionMemo.loadAvg)
+              total - child)
             df
         }
       }
@@ -306,17 +304,6 @@ object OpUtils {
     // accumulate, so the ledger totals what the process actually paid.
     private val ledger =
       new java.util.concurrent.ConcurrentHashMap[(String, String, Boolean), Double]()
-    // Raw per-event telemetry alongside the summed ledger: (sec, 1-min
-    // system load before, load after) per build/load, in arrival order —
-    // memo builds are single-shot in a bench run, so without a load stamp
-    // a co-tenant burst landing on one is indistinguishable from a
-    // regression in the driver artifact (r9: q31_pairs 27.5 s under load
-    // vs 3.2 s quiet). Loads (artifact reads) record NaN stamps — they
-    // are lazy footer reads, not adjudicable work.
-    private val eventLog = new java.util.concurrent.ConcurrentLinkedQueue[
-      (String, String, Boolean, Double, Double, Double)]()
-    private[operators] def loadAvg: Double =
-      java.lang.management.ManagementFactory.getOperatingSystemMXBean.getSystemLoadAverage
 
     // ---- nested-build frames (per thread): when one memo's build
     // triggers another memo's build (derived memos), the child's wall
@@ -332,25 +319,8 @@ object OpUtils {
       val f = frames.get()
       if (!f.isEmpty) f.push(f.pop() + sec)
     }
-    private def record(key: String, dir: String, loaded: Boolean, sec: Double,
-        load0: Double, load1: Double): Unit = {
+    private def record(key: String, dir: String, loaded: Boolean, sec: Double): Unit =
       ledger.merge((key, dir, loaded), sec, (a, b) => a + b)
-      eventLog.add((key, dir, loaded, sec, load0, load1))
-    }
-
-    /** Per-build telemetry [(sec, load_before, load_after)], labeled like
-      * [[buildSeconds]] (artifact loads excluded).
-      */
-    def buildTelemetry: Map[String, Seq[(Double, Double, Double)]] = {
-      import scala.jdk.CollectionConverters._
-      val events = eventLog.asScala.toSeq.collect {
-        case (k, d, false, s, l0, l1) => (k, d, s, l0, l1) }
-      val multiDir = events.groupBy(_._1).collect {
-        case (k, es) if es.map(_._2).distinct.size > 1 => k }.toSet
-      events.groupBy { case (k, d, _, _, _) =>
-        if (multiDir(k)) s"$k@${new java.io.File(d).getName}" else k
-      }.view.mapValues(_.map(e => (e._3, e._4, e._5))).toMap
-    }
 
     /** Ledger entries for one side (builds or loads), labeled
       * `<memoName>.<key>` when that key only ever touched one corpus dir

@@ -135,7 +135,7 @@ object Similarity {
     * signature) joined back to the vectors — shared by q35 (in-bucket
     * ANN top-3) and q193 (in-bucket mutual nearest neighbors), so the
     * plane/dot-product pipeline is paid once per (session, dir) and
-    * shows up as an adjudicated memo_build line item in Bench.
+    * shows up as a memo_build line item in Bench.
     */
   private[operators] def lshVectors(spark: SparkSession, dir: String): DataFrame =
     // artifact versioned on the index parameters (8 planes, md5 seeding)
@@ -495,10 +495,10 @@ object Similarity {
     * seeding audit trail). Stored as the slim (vec_id, tbl, bucket)
     * relation — embeddings join back at query time, so the index is
     * 4·n small rows, not 4 duplicated vector copies. Memoized: one
-    * build per (session, dir), an adjudicated memo_build line item.
+    * build per (session, dir), a memo_build line item.
     *
-    * The configuration is MEASURED, not guessed: `tools/ann_sweep.py`
-    * swept bits ∈ {4..12} × tables ∈ {1,2,4,8} × probe radius ∈ {0,1}
+    * The configuration is MEASURED, not guessed (NOTES_r11 §3): a sweep
+    * of bits ∈ {4..12} × tables ∈ {1,2,4,8} × probe radius ∈ {0,1}
     * against the exact top-5 ground truth at sf0.01 AND sf0.1;
     * (b=8, L=4, r=1) won both — recall@5 hits 18 → 80 of 160 and
     * queries-with-≥1-hit 15 → 31 of 32 at sf0.1 vs the single-table
@@ -634,8 +634,8 @@ object Similarity {
   private val ivfRecallNprobe = 8
 
   /** The measured IVF scaling policy — THE documented constructor for an
-    * IVF index over a corpus of n vectors (r11 `ScaleEvidence ann`
-    * finding, verified by the r12 `ivf-policy` row): a FIXED nlist keeps
+    * IVF index over a corpus of n vectors (NOTES_r11 §8 finding,
+    * verified by the NOTES_r12 §5 `ivf-policy` row): a FIXED nlist keeps
     * the candidate fraction flat but each list grows O(n) (per-query cost
     * grows linearly), while a √n-grown nlist at FIXED nprobe sees its
     * candidate fraction — and with it recall — decay as nprobe/nlist
@@ -650,8 +650,8 @@ object Similarity {
     * GREATEST/floor(sqrt)/`//` mirror) compute the identical parameters
     * from the identical count. q226 keeps the frozen fixture-scale sweep
     * point (64, 8) as the tuning artifact; q236 runs THIS policy
-    * oracle-gated, and `ScaleEvidence ann` measures it across 64×
-    * corpus growth.
+    * oracle-gated, and NOTES_r14 §9 measures it across 64× corpus
+    * growth.
     */
   private[graft] def ivfPolicyNlist(n: Long): Int =
     math.max(4, math.sqrt(n.toDouble).toInt)
@@ -667,8 +667,8 @@ object Similarity {
     * Pivots are the `nlist` lowest-vec_id vectors (q48's
     * deterministic, oracle-expressible quantizer).
     *
-    * Configuration measured, not guessed (`tools/ivf_sweep.py`, same
-    * ground truth as the LSH sweep): (nlist=64, m=1, nprobe=8) is the
+    * Configuration measured, not guessed (NOTES_r11 §3, same ground
+    * truth as the LSH sweep): (nlist=64, m=1, nprobe=8) is the
     * best IVF point in the ~12% candidate band at both sf0.01 and
     * sf0.1 — 73/160 top-5 hits, 30/32 queries with ≥1 hit at sf0.1 —
     * slightly BEHIND tuned multi-table LSH (q225: 80/160 at 14%),
@@ -857,7 +857,7 @@ object Similarity {
   // Product-quantization geometry: 64 dims = 16 subspaces × 4 dims, 16
   // centroids per subspace → codes are 16 nibbles = 8 bytes/vector, a 32×
   // compression of the 256-byte fp32 row. MEASURED, not guessed
-  // (`tools/pq_sweep.py`, same panel/ground truth as the LSH/IVF sweeps,
+  // (NOTES_r13 §10, same panel/ground truth as the LSH/IVF sweeps,
   // swept M ∈ {4,8,16} × K ∈ {8..64} at sf0.01 AND sf0.1): at every equal
   // byte budget more subspaces beats more centroids (6 B: M=8/K=64 26
   // hits vs M=16/K=8 17 at sf0.1), M=16/K=16 more than doubles the
@@ -866,8 +866,8 @@ object Similarity {
   // and K beyond 16 would break the oracle-expressible lowest-vec_id
   // codebook budget anyway). Declared at the top of the PQ block (the
   // q230 val-initialization-order lesson applies here too).
-  private[graft] val pqSubspaces = 16
-  private[graft] val pqSubDim = 4
+  private val pqSubspaces = 16
+  private val pqSubDim = 4
   private val pqCodebookK = 16
 
   /** Squared L2 between two equal-length DOUBLE vectors, accumulated
@@ -879,12 +879,6 @@ object Similarity {
     aggregate(zip_with(a, b, (x, y) => (x - y) * (x - y)),
       lit(0.0), (s, v) => s + v)
 
-  /** The PQ-ADC retrieval kernel over ANY (vec_id, embedding) relation —
-    * q239's body, factored so [[graft.tools.ScaleEvidence]] can measure
-    * the identical arithmetic across synthetic corpus growth and byte
-    * budgets. `panel` is a bounded (a_id) query relation; returns the
-    * per-query ADC top-5 as (a_id, b_id).
-    */
   /** L2-normalized view of a (vec_id, embedding) relation — the PQ model
     * domain (zero-norm vectors carry no direction — excluded; the exact
     * arm's isnan filter excludes them too).
@@ -967,9 +961,9 @@ object Similarity {
     graft.functions.VectorFunctions.adcLookupSum(codes, lut, kCent)
 
   /** ADC full-code scan + bounded top-5: packed codes against broadcast
-    * LUTs — the shared tail of [[pqAnnTop5]] and q239 (one definition, so
-    * a scoring/tie-break change cannot desynchronize the memoized path
-    * from the ScaleEvidence kernel).
+    * LUTs — the shared tail of q239 and q244 (one definition, so a
+    * scoring/tie-break change cannot desynchronize the fixed and trained
+    * codebooks' scans).
     */
   private def pqAdcTop5(codes: DataFrame, lutArr: DataFrame, kCent: Int): DataFrame = {
     val spark = codes.sparkSession
@@ -1001,15 +995,6 @@ object Similarity {
       .agg(count(lit(1)).as("n_queries"), sum($"a_id").as("a_checksum"))
   }
 
-  private[graft] def pqAnnTop5(emb: DataFrame, panel: DataFrame,
-      mSub: Int, subDim: Int, kCent: Int): DataFrame = {
-    val nv = pqNormalized(emb)
-    val cent = pqCentroids(nv, mSub, subDim, kCent)
-    val codes = pqCodesOf(nv, cent, mSub, subDim)
-    val lutArr = pqLutsOf(nv, cent, panel, mSub, subDim, kCent)
-    pqAdcTop5(codes, lutArr, kCent)
-  }
-
   /** Version token for anything persisting PQ codes of the adopted
     * geometry — bump on any re-tune of subspaces/centroids/freezing.
     */
@@ -1018,7 +1003,7 @@ object Similarity {
   /** The fixture corpus's PQ code relation as a session memo — codes are
     * corpus INFRASTRUCTURE (the n×8-byte index), not per-query work;
     * q239, q242 and through them q227 all ride one build per (session,
-    * dir), an adjudicated memo_build line item (the lsh_buckets
+    * dir), a memo_build line item (the lsh_buckets
     * discipline).
     */
   private[graft] def pqCodesMemo(spark: SparkSession, dir: String): DataFrame =
@@ -1044,7 +1029,7 @@ object Similarity {
   // division, verified identical in Spark `div` and DuckDB `//` on
   // negatives) — so training is bit-deterministic under ANY
   // partitioning AND mirrors exactly in unrolled oracle SQL.
-  // Training size/depth measured, not guessed (graft.tools.TrainedPqSweep
+  // Training size/depth measured, not guessed (NOTES_r14 §4, a sweep
   // at the scale audit's decayed point n=128000, grid S ∈ {64,256,1024} ×
   // T ∈ {0,2,4,8}): iters=0 reproduces the fixed codebook exactly
   // (16/160 — Lloyd IS the win, not sample init); S=64 (4 points per
@@ -1052,13 +1037,9 @@ object Similarity {
   // T=4 (32/160); S=1024 — 64 training points per centroid, the classic
   // k-means sizing — keeps improving through T=8 (33→38→41/160).
   // Adopted: 64·K sample, 8 iterations.
-  // private[graft]: ScaleEvidence's measurement arms must reference the
-  // SAME constants the gated kernels use (r14 advisor — a hardcoded
-  // copy would silently desynchronize the evidence from the kernel on
-  // the next re-tune that bumps pqTrainedLogicVersion).
   private val pqTrainSample = 1024
-  private[graft] val pqTrainIters = 8
-  private[graft] val pqFreezeScale = 1e6
+  private val pqTrainIters = 8
+  private val pqFreezeScale = 1e6
 
   /** Version token for anything persisting TRAINED-PQ state — bump on
     * any re-tune of sample size, iterations, freeze scale or geometry.
@@ -1104,7 +1085,7 @@ object Similarity {
     * [[lloydSerialOpsBudget]] op count, the bit-identical
     * [[pqTrainedCentroidsSharded]] above it — every caller (the
     * q244/q245/q246 memos, [[trainedCoarsePivots]],
-    * [[graft.streaming.IvfIndex]] epochs, the ScaleEvidence arms) gets
+    * [[graft.streaming.IvfIndex]] epochs) gets
     * the scale path automatically, and because the two kernels are
     * bit-equal (spec-pinned, q247 oracle-gated) the dispatch can never
     * change a gated result.
@@ -1340,19 +1321,6 @@ object Similarity {
         s => s.getField("lf")).as("lut"))
   }
 
-  /** The trained-PQ retrieval kernel over ANY (vec_id, embedding)
-    * relation — q244's body, factored so [[graft.tools.ScaleEvidence]]
-    * measures the identical arithmetic across synthetic corpus growth
-    * (the r14 companion to [[pqAnnTop5]]).
-    */
-  private[graft] def trainedPqAnnTop5(emb: DataFrame, panel: DataFrame,
-      mSub: Int, subDim: Int, kCent: Int, sampleN: Int, iters: Int): DataFrame = {
-    val nv = pqNormalized(emb)
-    val cent = pqTrainedCentroids(nv, mSub, subDim, kCent, sampleN, iters)
-    pqAdcTop5(pqTrainedCodesOf(nv, cent, mSub, subDim),
-      pqTrainedLutsOf(nv, cent, panel, mSub, subDim, kCent), kCent)
-  }
-
   /** Trained codebook as a session memo (256 rows — the training loop
     * runs once per (session, dir), not once per consumer).
     */
@@ -1380,8 +1348,8 @@ object Similarity {
     * sub-vectors. Measured against q239 on the same panel/ground truth,
     * this is the codebook-quality experiment as an oracle-gated query:
     * any recall difference between the two histograms is attributable
-    * to training alone. `ScaleEvidence ann` re-trains per corpus size
-    * and measures the r13 decay finding's answer: across the same 64×
+    * to training alone. NOTES_r14 §4/§9 re-train per corpus size
+    * and measure the r13 decay finding's answer: across the same 64×
     * growth where the fixed codebook decays 37→16/160, the trained
     * codebook holds essentially FLAT past the first rung (59→40→45→41
     * at s1024/t8 — 2.6× the fixed codebook at n=128k; the first rung is
@@ -1532,9 +1500,9 @@ object Similarity {
 
   /** The m=1 trained-coarse inverted lists of a normalized relation:
     * (b_id, c_id) — each vector's nearest trained pivot by
-    * frozen-integer L2 (q245's index kernel, shared with ScaleEvidence).
+    * frozen-integer L2 (q245's index kernel).
     */
-  private[graft] def trainedCoarseLists(nv: DataFrame, cent: DataFrame): DataFrame = {
+  private def trainedCoarseLists(nv: DataFrame, cent: DataFrame): DataFrame = {
     val spark = nv.sparkSession
     import spark.implicits._
     pqTrainedCodesOf(nv, cent, 1, pqSubspaces * pqSubDim)
@@ -1542,9 +1510,9 @@ object Similarity {
   }
 
   /** A panel's nprobe nearest trained pivots by frozen-integer L2:
-    * (a_id, c_id) — q245's probe kernel, shared with ScaleEvidence.
+    * (a_id, c_id) — q245's probe kernel.
     */
-  private[graft] def trainedCoarseProbes(nv: DataFrame, cent: DataFrame,
+  private def trainedCoarseProbes(nv: DataFrame, cent: DataFrame,
       panel: DataFrame, nprobe: Int): DataFrame =
     trainedCoarseProbesRk(nv, cent, panel, nprobe)
       .select(col("a_id"), col("c_id"))
@@ -1575,20 +1543,19 @@ object Similarity {
     * consume: q245's k-means centroids (frozen-integer Lloyd over the
     * full vectors, 64-points-per-centroid sample, [[pqTrainIters]]
     * iterations) thawed back to FLOAT at the freeze scale. Cosine
-    * ranking against them is scale-invariant in the pivot, and the
-    * ScaleEvidence spherical arm measures it at recall parity with the
-    * gated integer-L2 form across 64× growth.
+    * ranking against them is scale-invariant in the pivot, and
+    * NOTES_r14 §10b measures it at recall parity with the gated
+    * integer-L2 form across 64× growth.
     */
   private[graft] def trainedCoarsePivots(emb: DataFrame, nlist: Int): DataFrame =
     thawedPivots(pqTrainedCentroids(pqNormalized(emb), 1,
       pqSubspaces * pqSubDim, nlist, 64 * nlist, pqTrainIters))
 
   /** Frozen m=1 centroids thawed back to the (p_id, pe) FLOAT payload
-    * shape [[ivfNearOf]] consumes — factored so the ScaleEvidence
-    * spherical arm measures the IDENTICAL thaw the production pivots use
-    * (one definition, one [[pqFreezeScale]]; r14 advisor).
+    * shape [[ivfNearOf]] consumes (one definition, one
+    * [[pqFreezeScale]]).
     */
-  private[graft] def thawedPivots(cent: DataFrame): DataFrame = {
+  private def thawedPivots(cent: DataFrame): DataFrame = {
     val spark = cent.sparkSession
     import spark.implicits._
     cent.select($"c_id".cast("long").as("p_id"),
@@ -1849,7 +1816,7 @@ object Similarity {
     *
     * At 100 TB this is the kernel that actually runs: the √n policy
     * grows nlist past the serial driver loop's feasibility around
-    * K ≈ 1000 (ScaleEvidence `lloyd`: serial 20.7 s at K=1024 on its
+    * K ≈ 1000 (NOTES_r15 §2: serial 20.7 s at K=1024 on its
     * K² law vs sharded 3.3 s, and sharded 33.5 s at K=4096 where
     * serial extrapolates to ~5.5 min).
     */
@@ -2138,8 +2105,7 @@ object Similarity {
     import spark.implicits._
     val exact = exactPanelTop5(spark, dir)
     val panel = samplePanel(spark, dir, topkPanelK).select($"vec_id".as("a_id"))
-    // the same stage composition as [[pqAnnTop5]], with the code
-    // relation riding the session memo (one build per session/dir)
+    // the code relation rides the session memo (one build per session/dir)
     val nv = pqNormalized(Tables.embeddings(spark, dir))
     val cent = pqCentroids(nv, pqSubspaces, pqSubDim, pqCodebookK)
     val lutArr = pqLutsOf(nv, cent, panel, pqSubspaces, pqSubDim, pqCodebookK)
@@ -2206,7 +2172,7 @@ object Similarity {
     * `IndexIVFPQ` shape) — q226's coarse quantizer prunes the corpus to
     * nprobe/nlist of its inverted lists, q239's frozen ADC scores the
     * survivors from 8-byte codes. This is the operator the PQ scale
-    * audit says a 100 TB deployment actually runs: `ScaleEvidence ann`
+    * audit says a 100 TB deployment actually runs: NOTES_r13 §10
     * measured that standalone-PQ recall decays across corpus growth
     * (fixed codebook, densifying competitors) while IVF's policy holds
     * its candidate fraction — composed, the scan touches only the CODES
@@ -2569,15 +2535,15 @@ object Similarity {
     * synthetic near-dup clone = normalize(v + 0.15 · v_next), where
     * `v_next` is the cyclically-next corpus vector's direction — a
     * deterministic, RNG-free, oracle-expressible perturbation whose
-    * cosine to the source lands ≈ 0.985–0.99 (the `ScaleEvidence
-    * ivfindex` clone discipline; n_above_gate reports how many actually
-    * clear 0.92). The clone then plays the LATER arrival of
+    * cosine to the source lands ≈ 0.985–0.99 (the NOTES_r15 §5
+    * intake ladder's clone discipline; n_above_gate reports how many
+    * actually clear 0.92). The clone then plays the LATER arrival of
     * [[graft.streaming.IvfIndex.admitBatch]]'s asymmetric criterion —
     * caught at (k, R) iff the clone's k-probe set intersects the
     * source's rk ≤ R membership under the SAME fixture-trained coarse
     * centroids — and the grid reports n_caught per
     * (admit_nprobe, admit_list_rk) cell. The committed, judge-diffable
-    * companion to the `ScaleEvidence ivfindex` ladder — and the two
+    * companion to the NOTES_r15 §5 intake ladder — and the two
     * TOGETHER are the honest story, because catch-rate is
     * CORPUS-GEOMETRY-DEPENDENT: on the clustered fixture the
     * corpus-direction perturbation keeps the clone inside its source's
@@ -2750,7 +2716,7 @@ object Similarity {
     * steady-state recall-query wall milliseconds, frozen constants from
     * the r14 quiet-box bench at sf0.1 (load_start 0.25; raw = q34's
     * exact panel scan, lsh_tuned = q225, ivf = q226, pq = q239;
-    * pq_trained from a same-box warm MiniSuite rep — its first bench
+    * pq_trained from a same-box warm rep (NOTES_r14 §7) — its first bench
     * appearance is this round's closing run). Frozen, not live-timed:
     * a live timing column could never be oracle-stable, and the gate's
     * value is the integrity of the recall-per-byte-per-second TABLE,

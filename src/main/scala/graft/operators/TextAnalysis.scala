@@ -1290,8 +1290,8 @@ object TextAnalysis {
     */
   /** Session memo for the BM25 candidate pool — q131 is both a declared
     * query and q149's recall stage, so the full-corpus scoring pipeline
-    * is paid once per (session, dir) and surfaces as an adjudicated
-    * memo_build line item (the graphs/dedup discipline).
+    * is paid once per (session, dir) and surfaces as a memo_build line
+    * item (the graphs/dedup discipline).
     */
   private val memo = new OpUtils.SessionMemo("text")
 
@@ -1379,9 +1379,8 @@ object TextAnalysis {
     * The positional postings relation (doc, pos, token) is the
     * session-memoized `text.postings` (r12 verdict item 5): an inverted
     * index is corpus infrastructure, not per-query work — built once per
-    * (session, corpus), adjudicated as a memo_build line item with a
-    * quiet-hour reference, and every phrase query after the first pays
-    * only the two positional joins.
+    * (session, corpus), reported as a memo_build line item, and every
+    * phrase query after the first pays only the two positional joins.
     */
   def q148PhraseSearch(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
@@ -1491,6 +1490,17 @@ object TextAnalysis {
         size(array_intersect($"a.ts", $"b.ts")).cast("long").as("i"),
         (size($"a.ts") + size($"b.ts")).cast("long").as("ab"))
       .select($"da", $"db", expr("i * 10000 div (ab - i)").as("sim_bp"))
+    mmrGreedy(rel, sim)
+  }
+
+  /** q149's five greedy MMR rounds over a candidate pool `rel` (doc_id,
+    * rel_bp) and its pairwise similarities `sim` (da, db, sim_bp). The
+    * penalty needs the similarity of every remaining candidate to every
+    * picked doc: a missing or NULL `sim` entry raises an error instead of
+    * folding as −1, which would silently inflate that candidate's MMR.
+    */
+  private[operators] def mmrGreedy(rel: DataFrame, sim: DataFrame): DataFrame = {
+    import rel.sparkSession.implicits._
     val pool = rel
       .join(sim.groupBy($"da".as("doc_id"))
           .agg(map_from_entries(collect_list(struct($"db", $"sim_bp"))).as("sims")),
@@ -1517,7 +1527,10 @@ object TextAnalysis {
         |              c.doc_id as doc_id, c.rel_bp as rel_bp,
         |              CASE WHEN r = 1 THEN c.rel_bp
         |                   ELSE c.rel_bp - aggregate(acc, cast(-1 as bigint),
-        |                          (m, p) -> greatest(m, element_at(c.sims, p.doc_id)))
+        |                          (m, p) -> greatest(m, coalesce(
+        |                            element_at(c.sims, p.doc_id),
+        |                            raise_error(concat('q149: no similarity between doc ',
+        |                              c.doc_id, ' and picked doc ', p.doc_id)))))
         |              END as mmr)),
         |          cast(null as struct<doc_id:bigint,rel_bp:bigint,mmr:bigint>),
         |          (b, c) -> CASE WHEN b IS NULL OR c.mmr > b.mmr
@@ -2215,7 +2228,7 @@ object TextAnalysis {
     * trainings per suite pass, ~1.5 s each). One tagged relation carries
     * both outputs ('m' rows = merge table, 's' rows = final symbol
     * relation) so the training is paid once per (session, dir) and lands
-    * as an adjudicated memo_build line item, the bm25_pool discipline.
+    * as a memo_build line item, the bm25_pool discipline.
     * logicVersion bumps if the trainer or round count ever changes.
     */
   private def bpeTrainedMemo(spark: SparkSession, dir: String): DataFrame =

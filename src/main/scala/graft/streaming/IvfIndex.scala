@@ -172,7 +172,7 @@ object IvfIndex extends IndexLifecycle {
     * rebuild TRAINS the epoch's pivots (q245's frozen-integer Lloyd, 64
     * points per centroid, 8 iterations) and freezes the centroids as
     * the `piv/` payload. Assignment stays the cosine [[ivfNearOf]]
-    * kernel either way — validated by the `ScaleEvidence ann`
+    * kernel either way — validated by the NOTES_r14 §10b
     * spherical arm: cosine-ranked assignment against trained centroids
     * matches the gated q245 integer-L2 form's recall at every rung of
     * 64× growth (73/85/97/105 vs 73/82/94/106 of 160), because cosine

@@ -43,8 +43,8 @@ import org.apache.spark.sql.types.{ArrayType, LongType, StructField, StructType}
   * O(log n) times, amortized O(1) per admitted document (the classic
   * doubling argument). Between rebuilds, newly-emerged common shingles
   * (df 0 in the snapshot → treated rarest) cost extra candidates, never
-  * missed pairs; the ScaleEvidence `stream indexed` run measures that
-  * drift staying flat at 20× growth.
+  * missed pairs; NOTES_r8 §8 and NOTES_r10 §2 measure that drift
+  * staying flat at 20× growth.
   *
   * '''Single writer.''' One intake query per (corpus, index) pair — the
   * standard streaming-sink contract (the checkpoint serializes batches
@@ -168,17 +168,6 @@ object NearDupIndex extends IndexLifecycle {
       .select(px("doc_id").as("a_id"), $"b_id")
       .distinct()
   }
-
-  /** Diagnostic (ScaleEvidence `stream indexed`): candidate volume the
-    * indexed probe would generate for a raw (doc_id, text) batch under
-    * the current index state.
-    */
-  def candidateCount(spark: SparkSession, indexDir: String,
-      batch: DataFrame, minJaccard: Double = 0.7): Long =
-    candidatePairs(spark, indexDir,
-      indexRows(graft.operators.Dedup.hxOfDocs(batch),
-        readOrEmpty(spark, s"$indexDir/rank", rankSchema), minJaccard),
-      minJaccard).count()
 
   /** Plan view for PlanSpec: the full per-batch rejection pipeline
     * (index → candidates → verify) over the current stores, no writes —

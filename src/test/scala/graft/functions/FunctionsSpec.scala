@@ -43,6 +43,31 @@ class FunctionsSpec extends AnyFunSuite with SparkSpec {
     assert(got == (4.0 + 10.0 + 18.0))
   }
 
+  test("int_sq_dist is NULL on ragged arrays, interpreted and codegen alike") {
+    import org.apache.spark.sql.catalyst.InternalRow
+    import org.apache.spark.sql.catalyst.expressions.BoundReference
+    import org.apache.spark.sql.catalyst.expressions.codegen.GenerateUnsafeProjection
+    import org.apache.spark.sql.catalyst.util.ArrayData
+    import org.apache.spark.sql.types.{ArrayType, LongType}
+    val e = IntSqDist(BoundReference(0, ArrayType(LongType), nullable = false),
+      BoundReference(1, ArrayType(LongType), nullable = false))
+    assert(e.nullable)
+    val codegen = GenerateUnsafeProjection.generate(Seq(e))
+    val cases = Seq(
+      (Array(1L, 2L, 3L), Array(4L, 0L, 3L), Some(13L)),
+      (Array.empty[Long], Array.empty[Long], Some(0L)),
+      (Array(1L, 2L, 3L), Array(1L, 2L), None),
+      (Array(1L), Array.empty[Long], None))
+    cases.foreach { case (a, b, want) =>
+      val row = InternalRow(ArrayData.toArrayData(a), ArrayData.toArrayData(b))
+      val interpreted = Option(e.eval(row)).map(_.asInstanceOf[Long])
+      val out = codegen(row)
+      val generated = if (out.isNullAt(0)) None else Some(out.getLong(0))
+      assert(interpreted == want, s"interpreted ${a.toSeq} vs ${b.toSeq}")
+      assert(generated == want, s"codegen ${a.toSeq} vs ${b.toSeq}")
+    }
+  }
+
   test("SQL registration works") {
     VectorFunctions.register(spark)
     val got = spark.sql("SELECT cosine_similarity(array(1.0F, 0.0F), array(1.0F, 0.0F)) c")

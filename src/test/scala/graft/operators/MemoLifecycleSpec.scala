@@ -373,19 +373,28 @@ class MemoLifecycleSpec extends AnyFunSuite with SparkSpec {
     // the cheap rollup to triangle_counts — before the exclusive-frame
     // fix the parent entry double-counted the whole child build.
     OpUtils.SessionMemo.releaseAll(spark, sfDir)
-    val before = OpUtils.SessionMemo.buildTelemetry
-      .view.mapValues(_.size).toMap.withDefaultValue(0)
+    // deltas are summed per memo prefix: a key's label gains an
+    // `@<dir>` suffix once another corpus touched it, so per-label
+    // differences could mix corpora
+    def charged(ledger: Map[String, Double], prefix: String): Double =
+      ledger.collect { case (k, v) if k.startsWith(prefix) => v }.sum
+    val before = OpUtils.SessionMemo.buildSeconds
+    val t0 = System.nanoTime()
     Graphs.q125TriangleCount(spark, sfDir).collect()
-    val tel = OpUtils.SessionMemo.buildTelemetry
-    def newest(prefix: String): Double = {
-      val k = tel.keys.find(_.startsWith(prefix)).get
-      assert(tel(k).size > before(k), s"$prefix must have rebuilt")
-      tel(k).last._1
+    val wall = (System.nanoTime() - t0) / 1e9
+    val after = OpUtils.SessionMemo.buildSeconds
+    def delta(prefix: String): Double = {
+      val d = charged(after, prefix) - charged(before, prefix)
+      assert(d > 0, s"$prefix must have rebuilt")
+      d
     }
-    val child = newest("graphs.edge_triangles")
-    val parent = newest("graphs.triangle_counts")
+    val child = delta("graphs.edge_triangles")
+    val parent = delta("graphs.triangle_counts")
     assert(parent < child,
       s"derived rollup ($parent s) must be charged less than the enumeration ($child s)")
+    // additive: everything charged during the call fits inside its wall
+    val total = charged(after, "") - charged(before, "")
+    assert(total <= wall, s"ledger charged $total s during a $wall s call")
     OpUtils.SessionMemo.releaseAll(spark, sfDir)
   }
 }

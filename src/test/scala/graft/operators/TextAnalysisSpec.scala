@@ -480,6 +480,36 @@ class TextAnalysisSpec extends AnyFunSuite with SparkSpec {
     assert(got.head._2 == 10000L, "round 1 is the relevance argmax")
   }
 
+  test("data contract: doc_id is unique in the documents table") {
+    // q143's and q148's per-doc array_distinct rewrites take the
+    // (doc_id, gram) rows as globally distinct; a repeated doc_id would
+    // repeat them and double-count coverage and document frequencies
+    val docs = graft.sources.Tables.documents(spark, sfDir)
+    val dupes = docs.groupBy($"doc_id").count().filter($"count" > 1)
+      .select($"doc_id").as[Long].collect()
+    assert(dupes.isEmpty, s"repeated doc_id: ${dupes.take(10).toSeq}")
+    assert(docs.filter($"doc_id".isNull).isEmpty, "NULL doc_id")
+  }
+
+  test("q149: a missing or NULL pool similarity fails the MMR fold") {
+    val rel = Seq((1L, 10000L), (2L, 9000L), (3L, 8000L)).toDF("doc_id", "rel_bp")
+    val sims = for (a <- 1L to 3L; b <- 1L to 3L if a != b)
+      yield (a, b, Option(1000L * (a + b)))
+    def mmr(rows: Seq[(Long, Long, Option[Long])]): Seq[Long] =
+      TextAnalysis.mmrGreedy(rel, rows.toDF("da", "db", "sim_bp"))
+        .collect().map(_.getAs[Long]("doc_id")).toSeq
+    assert(mmr(sims) == Seq(1L, 2L, 3L))
+    // doc 2's similarity to the round-1 pick (doc 1) is gone, then NULL
+    val broken = Seq(
+      sims.filterNot(s => s._1 == 2L && s._2 == 1L),
+      sims.map(s => if (s._1 == 2L && s._2 == 1L) s.copy(_3 = None) else s))
+    broken.foreach { rows =>
+      val e = intercept[Exception](mmr(rows))
+      assert(e.getMessage.contains("q149: no similarity between doc 2 and picked doc 1"),
+        e.getMessage)
+    }
+  }
+
   test("q195: decile calibration replays from a driver-side rank fold") {
     val q = TextAnalysis.q27QualityScore(spark, sfDir)
       .selectExpr("doc_id", "CAST(round(quality * 1e6) AS BIGINT)")

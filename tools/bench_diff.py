@@ -1,5 +1,5 @@
 #!/usr/bin/env python3
-"""Per-query bench diff with ambient-load adjudication.
+"""Per-query bench diff, adjudicated by plan fingerprints.
 
 Usage: python3 tools/bench_diff.py OLD.json NEW.json [ratio]
            [--plans OLD_LEDGER NEW_LEDGER]
@@ -7,9 +7,7 @@ Usage: python3 tools/bench_diff.py OLD.json NEW.json [ratio]
 Compares the per-query minima of two bench artifacts (BENCH_LOCAL.json
 or a driver BENCH_r*.json whose full line survived) and prints every
 query whose time moved by more than `ratio` (default 1.5x) in either
-direction, annotated with the NEW run's per-rep load stamps so a move
-can be adjudicated ambient-vs-regression from the artifacts alone
-(the same discipline memo_build_alerts applies to memo builds).
+direction.
 
 With --plans, two plan-ledger files (tools/plan_ledger.txt at the two
 revisions, e.g. via `git show OLDREF:tools/plan_ledger.txt`) add a
@@ -17,11 +15,12 @@ plans-changed column: a timing move on a query whose canonical plan
 also changed is a code-caused move by construction, while a move with
 an identical plan fingerprint is ambient or data-sized. Queries whose
 plan changed WITHOUT a timing move are listed too (silent shape drift
-the ledger spec would have demanded a commit for).
+the ledger spec would have demanded a commit for). Per-layer evidence
+for a flagged query comes from `perfbench/run.py --trace 1`.
 
-Exit code 1 if any SLOWDOWN above the ratio lacks an obvious ambient
-explanation (every rep's load >= 2x the suite's load_start), else 0 —
-usable as a soft tripwire in a round's closing checklist.
+Exit code 1 if any SLOWDOWN above the ratio is not explained by an
+identical plan fingerprint (plan=CHANGED, or no --plans given), else 0
+— usable as a soft tripwire in a round's closing checklist.
 """
 import json
 import sys
@@ -61,8 +60,6 @@ def main():
     old, new = load(argv[0]), load(argv[1])
     ratio = float(argv[2]) if len(argv) > 2 else 1.5
     qo, qn = old.get("queries", {}), new.get("queries", {})
-    reps = new.get("reps", {})
-    load0 = new.get("load_start", 0.0) or 0.0
     shared = sorted(set(qo) & set(qn))
     added = sorted(set(qn) - set(qo))
     removed = sorted(set(qo) - set(qn))
@@ -74,19 +71,17 @@ def main():
             continue
         r = b / a
         if r >= ratio or r <= 1.0 / ratio:
-            stamps = [(x[1], x[2]) for x in reps.get(q, []) if len(x) >= 3]
-            ambient = bool(stamps) and all(
-                max(l0, l1) >= max(2.0, 2.0 * load0) for l0, l1 in stamps)
-            moves.append((r, q, a, b, stamps, ambient))
-            if r >= ratio and not ambient:
+            moves.append((r, q, a, b))
+            same_plan = plans_changed is not None and q not in plans_changed
+            if r >= ratio and not same_plan:
                 unexplained.append(q)
-    for r, q, a, b, stamps, ambient in sorted(moves, key=lambda m: -m[0]):
-        tag = "ambient?" if (r >= ratio and ambient) else (
-            "REGRESSION?" if r >= ratio else "improved")
+    for r, q, a, b in sorted(moves, key=lambda m: -m[0]):
+        tag = "REGRESSION?" if q in unexplained else (
+            "slower" if r >= ratio else "improved")
         plan = ""
         if plans_changed is not None:
             plan = "  plan=CHANGED" if q in plans_changed else "  plan=same"
-        print(f"{q:36s} {a:7.2f}s -> {b:7.2f}s  {r:5.2f}x  {tag}{plan}  loads={stamps}")
+        print(f"{q:36s} {a:7.2f}s -> {b:7.2f}s  {r:5.2f}x  {tag}{plan}")
     if plans_changed is not None:
         moved = {m[1] for m in moves}
         silent = sorted(plans_changed - moved)
@@ -100,7 +95,7 @@ def main():
     tot_o = sum(v for v in qo.values() if v > 0)
     tot_n = sum(v for v in qn.values() if v > 0)
     print(f"shared query total: n/a  |  suite sums: {tot_o:.1f}s ({len(qo)}q)"
-          f" -> {tot_n:.1f}s ({len(qn)}q), new load_start={load0}")
+          f" -> {tot_n:.1f}s ({len(qn)}q)")
     shared_o = sum(qo[q] for q in shared if qo[q] > 0 and qn[q] > 0)
     shared_n = sum(qn[q] for q in shared if qo[q] > 0 and qn[q] > 0)
     if shared_o > 0:
